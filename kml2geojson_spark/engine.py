@@ -19,7 +19,10 @@ plan (broadcast vs SMJ, AQE, partial aggregation).
 
 from __future__ import annotations
 
+import glob
 import json
+import os
+import re
 from typing import Iterator, Optional
 
 import numpy as np
@@ -185,13 +188,12 @@ def convert_documents_from_parquet(
     column — the same split-granular scan pattern as
     :func:`extract_points_from_parquet`.
 
-    When to use which: full conversion is dominated by per-doc
-    parse+JSON CPU, so on a warm local cluster the row path measures
-    slightly FASTER (7.2s vs 8.4s for 100k docs at 32 cores,
-    interleaved min-of-3) — the JVM row conversion overlaps with
-    Python work. This variant wins when executor JVM memory/CPU is the
-    scarce resource (the JVM never materializes the nested spans rows)
-    or when the table format hands out file-granular splits anyway."""
+    When to use which: full conversion is dominated by per-document
+    parse and JSON CPU, which the row path's JVM row conversion
+    overlaps with. This variant pays off when executor JVM memory/CPU
+    is the scarce resource (the JVM never materializes the nested spans
+    rows) or when the table format hands out file-granular splits
+    anyway."""
     _validate_style_type(style_type)
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -411,16 +413,84 @@ def tile_counts_from_parquet(spark, path: str, res: int) -> DataFrame:
 
 
 def parquet_files_df(spark, path: str) -> DataFrame:
-    """One row per parquet data file of an (Iceberg-style) table
-    directory — the split list a table-format scan hands out. Used by
-    the file-granular readers below."""
-    import glob
+    """The split list a table-format scan hands out for an
+    (Iceberg-style) table directory: one row per parquet data file,
+    one partition per split. Each Python task of the file-granular
+    readers reads every file of its split in turn.
 
-    files = sorted(glob.glob(f"{path}/*.parquet"))
+    Files are packed the way Spark packs its own file scans
+    (``FilePartition``): next-fit over the files sorted largest first,
+    splits capped at ``maxSplitBytes`` (see :func:`_file_splits`). The
+    split count therefore equals ``spark.read.parquet(path)``'s for
+    files that Spark would not cut: about one split per slot for a
+    small table, splits of up to ``spark.sql.files.maxPartitionBytes``
+    at scale. The list is built on the JVM (``range`` with one row per
+    split, exploded into that split's paths): no Python RDD stage and
+    no shuffle.
+
+    Why not one task per file: every Python task pays a fixed CPU cost
+    before it reads a byte. On Python 3.11 PySpark's per-task
+    ``setup_spark_files`` calls ``importlib.invalidate_caches()``,
+    which re-reads the central directories of the ~16 zip archives on
+    the worker's path (pyspark.zip, py4j, the spark-core jar): measured
+    0.18–0.23 s of CPU per task on a 4-vCPU VM. With one task per file
+    the perfbench ``tiles_mixed`` op (16 files, ``local[4]``) ran 22
+    tasks and spent 1.24–1.36 s of worker CPU outside the kernels
+    against ~0.4 s inside them; packed, it runs 6 tasks and 0.21–0.25 s
+    (BENCH/BASELINE.md)."""
+    files = sorted(glob.glob(os.path.join(glob.escape(path), "*.parquet")))
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
-    return spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(len(files))
+    splits = _file_splits(spark, files)
+    return spark.range(0, len(splits), 1, len(splits)).select(
+        F.explode(F.lit(splits)[F.col("id").cast("int")]).alias("path"))
+
+
+_BYTE_SHIFTS = {"b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20, "g": 30,
+                "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size conf value (``"134217728b"``, ``"128m"``) in
+    bytes; a bare number is bytes."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", value.lower())
+    if m is None or m.group(2) not in ("", *_BYTE_SHIFTS):
+        raise ValueError(f"not a byte size: {value!r}")
+    return int(m.group(1)) << _BYTE_SHIFTS[m.group(2) or "b"]
+
+
+def _file_splits(spark, files: list[str]) -> list[list[str]]:
+    """Pack whole files into splits with Spark's file-scan rule
+    (``FilePartition.maxSplitBytes`` / ``getFilePartitions``):
+
+        maxSplitBytes = min(maxPartitionBytes,
+                            max(openCostInBytes, totalBytes / minPartitions))
+
+    where ``totalBytes`` charges every file ``openCostInBytes`` on top
+    of its length and ``minPartitions`` is ``spark.sql.files.minPartitionNum``,
+    else the default parallelism. Files go largest first into the
+    current split until the next one would push it past
+    ``maxSplitBytes``. A file is never cut: the kernels read whole
+    files."""
+    conf = spark.conf
+    max_bytes = _conf_bytes(conf.get("spark.sql.files.maxPartitionBytes"))
+    open_cost = _conf_bytes(conf.get("spark.sql.files.openCostInBytes"))
+    min_parts = int(conf.get("spark.sql.files.minPartitionNum", None)
+                    or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+                    or spark.sparkContext.defaultParallelism)
+    sizes = {f: os.path.getsize(f) for f in files}
+    total = sum(sizes.values()) + open_cost * len(files)
+    max_split = min(max_bytes, max(open_cost, total // min_parts))
+
+    splits, current, current_size = [], [], 0
+    for f in sorted(files, key=sizes.__getitem__, reverse=True):
+        if current and current_size + sizes[f] > max_split:
+            splits.append(current)
+            current, current_size = [], 0
+        current.append(f)
+        current_size += sizes[f] + open_cost
+    splits.append(current)
+    return splits
 
 
 def extract_points_from_parquet(spark, path: str) -> DataFrame:
@@ -428,14 +498,12 @@ def extract_points_from_parquet(spark, path: str) -> DataFrame:
     worker read its split directly with pyarrow (C++ columnar reader).
 
     Why: Spark's mapInArrow/mapInPandas input crosses parquet →
-    ColumnarBatch → InternalRow → Arrow inside the JVM; for the nested
-    ``spans array<struct>`` column that row conversion costs ~2× the
-    actual parse CPU and caps scaling (measured: 4.1k docs/s via the
-    row path vs 17k docs/s pure-Python on 32 cores). Reading the
-    columnar file directly in the worker skips the JVM entirely — the
-    same split-granular pattern an Iceberg table scan provides at
-    cluster scale. Result is identical to
-    ``extract_points(spark.read.parquet(path))``.
+    ColumnarBatch → InternalRow → Arrow inside the JVM, and for the
+    nested ``spans array<struct>`` column that row conversion is JVM
+    work on top of the parse. Reading the columnar file directly in
+    the worker skips the JVM entirely — the same split-granular pattern
+    an Iceberg table scan provides at cluster scale. Result is
+    identical to ``extract_points(spark.read.parquet(path))``.
     """
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

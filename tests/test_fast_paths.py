@@ -94,6 +94,96 @@ def test_convert_documents_from_parquet_parity(spark, tmp_path):
     assert norm(via_df) == norm(via_files)
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _split_paths(df) -> list[list[str]]:
+    return df.rdd.glom().map(lambda rows: [r["path"] for r in rows]).collect()
+
+
+def test_split_list_contract(spark, tmp_path):
+    """The file-granular split list: every data file exactly once,
+    packed like Spark's own parquet scan, built without a shuffle or a
+    Python RDD scan."""
+    import glob
+    from kml2geojson_spark.engine import parquet_files_df
+
+    path = str(tmp_path / "corpus")
+    k2gs.synthesize_documents_kml(spark, 64, seed=5, max_placemarks=4) \
+        .repartition(16).write.parquet(path)
+    files = sorted(glob.glob(f"{path}/*.parquet"))
+    assert len(files) == 16
+
+    df = parquet_files_df(spark, path)
+    splits = _split_paths(df)
+    assert sorted(f for s in splits for f in s) == files
+    assert len(splits) == 4 == spark.read.parquet(path).rdd.getNumPartitions()
+    plan = _plan(df)
+    assert "Exchange" not in plan and "ExistingRDD" not in plan, plan
+    assert "Exchange" not in _plan(extract_points_from_parquet(spark, path))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        splits = _split_paths(parquet_files_df(spark, path))
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(f for s in splits for f in s) == files
+    assert len(splits) == 16
+
+
+def test_file_scan_escapes_glob_chars(spark, tmp_path):
+    """A table directory whose name holds glob metacharacters lists its
+    own files, not those of a directory the unescaped pattern matches."""
+    from kml2geojson_spark.engine import parquet_files_df
+
+    path = str(tmp_path / "corpus[1]")
+    docs = k2gs.synthesize_documents_kml(spark, 30, seed=23, max_placemarks=5)
+    docs.write.parquet(path)
+    k2gs.synthesize_documents_kml(spark, 10, seed=29).write.parquet(
+        str(tmp_path / "corpus1"))
+
+    paths = [r["path"] for r in parquet_files_df(spark, path).collect()]
+    assert paths and all(p.startswith(path + "/") for p in paths)
+    # spark.read.parquet globs its path too, so compare against the
+    # written DataFrame itself
+    via_rows = extract_points(docs).toPandas()
+    via_files = extract_points_from_parquet(spark, path).toPandas()
+    assert _sorted(via_rows).equals(_sorted(via_files))
+
+
+def test_multi_file_split_parity(spark, tmp_path):
+    """With several files per task, the file-granular tile counts and
+    conversion equal their row-scan counterparts."""
+    from kml2geojson_spark.engine import (parquet_files_df,
+                                          tile_counts_from_parquet)
+    from kml2geojson_spark.spatial.ops import _tile_agg
+
+    path = str(tmp_path / "corpus")
+    k2gs.synthesize_documents_kml(spark, 72, seed=31, max_placemarks=8) \
+        .repartition(12).write.parquet(path)
+    assert len(_split_paths(parquet_files_df(spark, path))) < 12
+
+    cols = ("cell_id", "n_features", "n_docs")
+    fused = sorted(tuple(r) for r in
+                   tile_counts_from_parquet(spark, path, 7).select(*cols).collect())
+    rows = sorted(tuple(r) for r in _tile_agg(
+        extract_points(spark.read.parquet(path)), 7).select(*cols).collect())
+    assert fused == rows and len(rows) > 0
+
+    def norm(df):
+        return sorted((r["doc_id"], r["style_json"], tuple(r["layer_names"]),
+                       tuple(r["layers"])) for r in df.collect())
+
+    via_files = norm(k2gs.convert_documents_from_parquet(spark, path,
+                                                         style_type="svg"))
+    via_rows = norm(k2gs.convert_documents(spark.read.parquet(path),
+                                           style_type="svg"))
+    assert via_files == via_rows and len(via_rows) == 72
+
+
 # ---------------------------------------------------------------------------
 # streaming point extractor (tile-path fast lane)
 # ---------------------------------------------------------------------------

@@ -2,10 +2,10 @@
 
 The north rule mandates running via ``spark-submit --py-files`` — this
 is that job. It consumes a spans-table parquet directory (synthesizing
-one deterministically when absent), runs the staged pipeline
-(scan → parse → tile) with lineage checkpoints, and prints a one-line
-JSON summary. Killed and re-submitted, it resumes from the committed
-stages.
+one deterministically when absent), runs the staged pipeline (corpus
+snapshot → ``tile_counts_from_parquet`` on the snapshot's files) with
+lineage checkpoints, and prints a one-line JSON summary. Killed and
+re-submitted, it resumes from the committed stages.
 
     ./tools/submit_tiles.sh [n_docs] [res] [work_dir]
 """
@@ -29,18 +29,21 @@ def main() -> None:
 
     import kml2geojson_spark as k2gs
     from kml2geojson_spark.lineage import Pipeline
-    from kml2geojson_spark.engine import extract_points
-    from kml2geojson_spark.spatial.ops import _tile_agg
+    from kml2geojson_spark.engine import tile_counts_from_parquet
 
     t0 = time.time()
     pipe = Pipeline(spark, work)
-    docs = pipe.stage(
+    pipe.stage(
         "corpus",
         lambda: k2gs.synthesize_documents_kml(spark, n_docs, seed=42),
         params={"n_docs": n_docs, "seed": 42})
+    # a committed snapshot holds each document once: the fused kernel's
+    # precondition
+    corpus_data = (pipe.log.root / "corpus"
+                   / pipe.manifests["corpus"]["snapshot_id"] / "data")
     tiles = pipe.stage(
         "tiles",
-        lambda: _tile_agg(extract_points(docs), res),
+        lambda: tile_counts_from_parquet(spark, str(corpus_data), res),
         params={"res": res}, cell_col="cell_id")
 
     from pyspark.sql import functions as F
