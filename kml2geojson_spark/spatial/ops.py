@@ -5,8 +5,8 @@ Design rules (BASELINE.json north_star / SURVEY.md §2.3):
 - Bulk cell encoding is a pure Column expression (JVM, codegen) — the
   100-TB hot path never crosses into Python.
 - Geometry-heavy kernels (polygon clipping, ray casting) run as numpy
-  inside Arrow-batched ``mapInPandas`` — vectorized per batch, never
-  per-row Python.
+  inside Arrow-batched ``mapInArrow`` / ``mapInPandas`` — vectorized
+  per batch, never per-row Python.
 - Joins are plain DataFrame equi-joins on ``cell_id`` so Catalyst picks
   broadcast vs shuffled hash vs SMJ (with AQE); the explicitly-salted
   variant for hot cells lives in :mod:`.salted`.
@@ -22,6 +22,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -598,7 +599,6 @@ def _raycast_np(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
 def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
              point_id: str = "point_id", x: str = "x", y: str = "y",
              poly_id: str = "poly_id", rings: str = "rings",
-             broadcast_polygons: bool = True,
              salt: Optional[int] = None,
              rings_distribution: str = "auto",
              max_driver_rings: int = 20_000,
@@ -607,15 +607,15 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
 
     Two plan shapes, chosen by ``rings_distribution``:
 
-    - ``"driver"`` — polygons are a dimension table: rings are
-      collected once and broadcast; points get a cell id (codegen), the
-      candidate join is an equi-join on ``cell_id`` (broadcast when
-      ``broadcast_polygons``; pass ``salt`` to route hot cells through
-      the explicitly-salted join) and the ray-cast runs vectorized per
-      Arrow batch against the broadcast ring map. Zero shuffles of the
-      point side when the cover is broadcast. REFUSED above
-      ``max_driver_rings`` polygons — a driver collect must never sit
-      in a 100-TB hot path.
+    - ``"driver"`` — polygons are a dimension table: ONE bounded collect
+      (``limit(max_driver_rings + 1)``) brings the rings to the driver,
+      which builds each polygon's bbox cell cover in numpy and
+      broadcasts it, sorted, with the rings. Points get a cell id
+      (codegen), then a single ``mapInArrow`` pass binary-searches each
+      point's cell in the cover and ray-casts the candidates per
+      polygon. No join, no Python cover job, no shuffle of the points.
+      REFUSED above ``max_driver_rings`` polygons — a driver collect
+      must never sit in a 100-TB hot path.
     - ``"cogroup"`` — polygons at any scale: rings never touch the
       driver. Each polygon's bbox cover cells are emitted WITH its
       rings (pure Column cover, JVM-side); both sides shuffle once on
@@ -626,11 +626,11 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
       covering cell, never per point. Size ``cogroup_buckets`` ≈
       cluster task slots × small multiple: each call holds ~1/buckets
       of the points, so more buckets = less memory per task and more
-      parallelism. ``salt`` additionally splits hot cells' points
-      across ``salt`` sub-keys of their bucket (rings replicated per
-      salt).
-    - ``"auto"`` (default) — one cheap count() on the polygon side
-      picks driver below ``max_driver_rings``, cogroup above.
+      parallelism. ``salt`` splits hot cells' points across ``salt``
+      sub-keys of their bucket (rings replicated per salt); it applies
+      to this shape only, as the driver shape never shuffles points.
+    - ``"auto"`` (default) — the driver shape's bounded collect picks
+      driver at or below ``max_driver_rings`` polygons, cogroup above.
 
     A point lives in exactly one cell and a polygon covers a cell at
     most once, so candidate pairs are unique — no post-join dedup
@@ -645,69 +645,68 @@ def pip_join(points: DataFrame, polygons: DataFrame, res: int, *,
                             F.col(rings).alias("rings"))
 
     if rings_distribution in ("auto", "driver"):
-        # bounded probe: limit(threshold+1).count() stops scanning once
-        # the threshold is exceeded instead of evaluating the whole
-        # polygon lineage just to size-check it
-        bounded = polys.limit(max_driver_rings + 1).count()
-        if rings_distribution == "auto":
-            rings_distribution = \
-                "driver" if bounded <= max_driver_rings else "cogroup"
-        elif bounded > max_driver_rings:
+        # limit(threshold+1) stops scanning once the threshold is
+        # exceeded; the same rows size the choice and supply the rings
+        ring_rows = polys.limit(max_driver_rings + 1).collect()
+        if len(ring_rows) <= max_driver_rings:
+            return _pip_join_driver(pts, ring_rows, res)
+        if rings_distribution == "driver":
             raise ValueError(
                 f"rings_distribution='driver' with more than "
                 f"{max_driver_rings} polygons (max_driver_rings): "
                 f"collecting them would bottleneck the driver — use "
                 f"'cogroup' (or raise the threshold explicitly)")
-
-    if rings_distribution == "cogroup":
-        return _pip_join_cogroup(pts, polys, res, salt,
-                                 n_buckets=cogroup_buckets)
-    return _pip_join_driver(pts, polys, res, broadcast_polygons, salt)
+    return _pip_join_cogroup(pts, polys, res, salt, n_buckets=cogroup_buckets)
 
 
-def _pip_join_driver(pts: DataFrame, polys: DataFrame, res: int,
-                     broadcast_polygons: bool,
-                     salt: Optional[int]) -> DataFrame:
-    """Dimension-table shape: driver-broadcast ring map + candidate
-    equi-join (size-gated by the caller)."""
-    cover = polygon_cover(polys, res, min_fraction=-1.0) \
-        .select("poly_id", "cell_id")
+def _pip_join_driver(pts: DataFrame, ring_rows, res: int) -> DataFrame:
+    """Dimension-table shape over collected ``(poly_id, rings)`` rows
+    and points carrying ``cell_id``. Each polygon's bbox cells come from
+    ``_bbox_grid`` (the float expressions of the cogroup shape and the
+    oracle), sorted into one cell array with a parallel owner array.
+    Per Arrow batch: ``searchsorted`` finds each point's candidate
+    range, one stable argsort groups candidates by owner, and each
+    group is ray-cast against its polygon's rings."""
+    pids, ring_list, cells, owners = [], [], [], []
+    for r in ring_rows:
+        rs = _rings_to_np(r["rings"])
+        if not rs:
+            continue
+        ix0, ix1, iy0, iy1 = _bbox_grid(rs[0], res)
+        gx, gy = np.meshgrid(np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1))
+        cells.append(cell_encode_grid_np(gx.ravel(), gy.ravel(), res))
+        owners.append(np.full(gx.size, len(ring_list), dtype=np.int64))
+        pids.append(int(r["poly_id"]))
+        ring_list.append(rs)
+    cover = np.concatenate([np.empty(0, dtype=np.int64)] + cells)
+    owner = np.concatenate([np.empty(0, dtype=np.int64)] + owners)
+    order = np.argsort(cover, kind="stable")
+    bc = pts.sparkSession.sparkContext.broadcast((
+        cover[order], owner[order], np.asarray(pids, dtype=np.int64), ring_list))
 
-    if salt:
-        from .salted import salted_join
-        cand = salted_join(pts, cover, "cell_id", n_salt=salt)
-    elif broadcast_polygons:
-        cand = pts.join(F.broadcast(cover), "cell_id")
-    else:
-        cand = pts.join(cover, "cell_id")
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        cover, owner, pids, rmap = bc.value
+        for rb in batches:
+            cell = rb.column("cell_id").to_numpy()
+            lo = np.searchsorted(cover, cell, "left")
+            n = np.searchsorted(cover, cell, "right") - lo
+            pt = np.repeat(np.arange(len(cell)), n)
+            # the k-th candidate of point i sits at cover[lo[i] + k]
+            own = owner[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(len(pt))]
+            srt = np.argsort(own, kind="stable")
+            pt, own = pt[srt], own[srt]
+            px = rb.column("x").to_numpy(zero_copy_only=False).astype(np.float64)
+            py = rb.column("y").to_numpy(zero_copy_only=False).astype(np.float64)
+            keep = np.zeros(len(pt), dtype=bool)
+            cuts = np.flatnonzero(np.diff(own, prepend=-1, append=-1))
+            for a, b in zip(cuts[:-1], cuts[1:]):
+                keep[a:b] = _raycast_np(px[pt[a:b]], py[pt[a:b]], rmap[own[a]])
+            if keep.any():
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column("point_id").take(pt[keep]).cast(pa.int64()),
+                     pa.array(pids[own[keep]])], names=["point_id", "poly_id"])
 
-    ring_rows = polys.collect()
-    ring_map = {int(r["poly_id"]): _rings_to_np(r["rings"]) for r in ring_rows}
-    bc = pts.sparkSession.sparkContext.broadcast(ring_map)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rmap = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield _empty_pip()
-                continue
-            keep_pt, keep_poly = [], []
-            for pid, grp in pdf.groupby("poly_id"):
-                rs = rmap.get(int(pid))
-                if not rs:
-                    continue
-                mask = _raycast_np(grp["x"].to_numpy(np.float64),
-                                   grp["y"].to_numpy(np.float64), rs)
-                keep_pt.append(grp["point_id"].to_numpy(np.int64)[mask])
-                keep_poly.append(np.full(int(mask.sum()), int(pid), dtype=np.int64))
-            if keep_pt:
-                yield pd.DataFrame({
-                    "point_id": np.concatenate(keep_pt),
-                    "poly_id": np.concatenate(keep_poly)})
-            else:
-                yield _empty_pip()
-
-    return cand.select("point_id", "x", "y", "poly_id").mapInPandas(run, _PIP_SCHEMA)
+    return pts.select("point_id", "x", "y", "cell_id").mapInArrow(run, _PIP_SCHEMA)
 
 
 def _empty_pip() -> pd.DataFrame:
@@ -2270,8 +2269,8 @@ def pip_anti_join(points: DataFrame, polygons: DataFrame, res: int, *,
     identical ray-cast crossing rule, so
     ``pip_join ∪ pip_anti_join ≡ points`` exactly (asserted in tests).
 
-    Scale shape: :func:`pip_join` for the candidates (same cell-bucket
-    equi-join — every kwarg forwards), then one LEFT ANTI hash join of
+    Scale shape: :func:`pip_join` for the matches (same two plan
+    shapes — every kwarg forwards), then one LEFT ANTI hash join of
     the points against the matched point ids. The anti side is ≤ the
     match count (often far smaller than the point table); Catalyst
     broadcasts it when small. No extra Python.

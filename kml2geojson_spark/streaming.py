@@ -261,13 +261,12 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
     against a STATIC polygon dimension → incremental per-polygon point
     counts.
 
-    Stream-static shape: the polygon cover (cell_id, poly_id) is a
-    broadcast build side (static dimension — the driver ring collect is
-    legitimate here and size-gated by ``max_driver_rings``, enforced
-    below with a bounded probe), the
-    streaming points equi-join it on their cell id, and the exact
-    ray-cast runs in the same stateless Arrow map as batch — all
-    streaming-legal operators, so Spark maintains only the final
+    Stream-static shape: one bounded collect of the static polygon side
+    (size-gated by ``max_driver_rings``) supplies the rings and their
+    bbox cell cover, broadcast as in the batch driver shape; the
+    streaming points get a cell id and go through the same stateless
+    Arrow pass (cover lookup by binary search + exact ray cast) — a
+    streaming-legal operator, so Spark maintains only the final
     per-polygon running counts as state. The batch counterpart
     (``pip_join(...).groupBy(poly_id).count()``) equals the streamed
     result once the stream drains (asserted in tests).
@@ -275,12 +274,12 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
     from .spatial import encode_points
     from .spatial.ops import _pip_join_driver
 
-    # enforce the driver-broadcast size gate ourselves: the streaming
-    # shape REQUIRES the broadcast plan (cogroup applyInPandas is not
-    # available on streams), so an oversized polygon side must refuse
-    # up front rather than silently collect unbounded rings
-    bounded = polygons.limit(max_driver_rings + 1).count()
-    if bounded > max_driver_rings:
+    # the streaming shape REQUIRES the driver-broadcast rings (cogroup
+    # applyInPandas is not available on streams), so an oversized
+    # polygon side must refuse up front rather than collect unbounded
+    ring_rows = polygons.select("poly_id", "rings") \
+        .limit(max_driver_rings + 1).collect()
+    if len(ring_rows) > max_driver_rings:
         raise ValueError(
             f"stream_pip_counts: polygon dimension exceeds "
             f"max_driver_rings={max_driver_rings}; the streaming shape "
@@ -289,15 +288,11 @@ def stream_pip_counts(docs: DataFrame, polygons: DataFrame,
 
     pts = _extract_points_stream(docs)
     # deterministic row id (monotonically_increasing_id is illegal on
-    # streams): _pip_join_driver emits (point_id, poly_id) candidates;
-    # only the count per polygon is aggregated downstream
+    # streams): only the count per polygon is aggregated downstream
     pts = pts.select(
         F.xxhash64("doc_id", "feature_idx", "geom_idx").alias("point_id"),
         "x", "y")
-    pts = encode_points(pts, res)
-    polys = polygons.select(F.col("poly_id"), F.col("rings"))
-    matched = _pip_join_driver(pts, polys, res,
-                               broadcast_polygons=True, salt=None)
+    matched = _pip_join_driver(encode_points(pts, res), ring_rows, res)
     return matched.groupBy("poly_id").agg(
         F.count(F.lit(1)).alias("n_points"))
 

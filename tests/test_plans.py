@@ -72,9 +72,10 @@ def test_knn_exact_broadcasts_queries(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_pip_join_is_cell_equi_join(spark):
-    """The candidate join must be an equi-join on cell_id (hash/broadcast),
-    never a cartesian product."""
+def test_pip_join_driver_is_one_arrow_pass(spark):
+    """Driver shape: the points go through ONE Arrow map (cover lookup
+    + ray cast) — no candidate join of any kind, no shuffle, no Python
+    cover stage."""
     import pandas as pd
     import numpy as np
     from kml2geojson_spark.spatial import pip_join
@@ -85,9 +86,10 @@ def test_pip_join_is_cell_equi_join(spark):
         [(0, [[[-5.0, -5.0], [5.0, -5.0], [5.0, 5.0], [-5.0, 5.0], [-5.0, -5.0]]])],
         "poly_id long, rings array<array<array<double>>>")
     plan = _plan(pip_join(pts, polys, 6))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "ShuffledHashJoin" in plan \
-        or "SortMergeJoin" in plan
+    for marker in ("CartesianProduct", "BroadcastNestedLoopJoin", "Exchange",
+                   "MapInPandas"):
+        assert marker not in plan, f"{marker} found in pip driver plan"
+    assert plan.count("MapInArrow") == 1, plan[:400]
 
 
 def test_exact_dedup_has_partial_aggregation(spark):

@@ -658,6 +658,64 @@ def test_pip_join_modes_agree_on_malformed_polygons(spark):
     assert a == b == _pip_oracle(pts, polys)
 
 
+def test_pip_join_shapes_agree_on_edge_cases(spark):
+    """Driver shape == cogroup shape == brute-force ray cast on the
+    cases where a cell cover can go wrong: points on cell boundaries,
+    points clamped at x=±180 / y=±90, a holed polygon, polygons one
+    cell big or lying on cell edges, overlapping polygons sharing
+    cells, Arrow batches without a single candidate, NaN and null
+    coordinates, and an empty polygon table. res 4 puts cell edges
+    at multiples of 22.5° / 11.25°."""
+    res = 4
+    grid = [(x, y) for x in (-45.0, -22.5, 0.0, 22.5, 45.0)
+            for y in (-22.5, -11.25, 0.0, 11.25, 22.5)]
+    clamped = [(180.0, 0.0), (-180.0, 0.0), (0.0, 90.0), (0.0, -90.0),
+               (180.0, 90.0), (-180.0, -90.0), (175.0, 90.0),
+               (-175.0, -85.0), (185.0, 85.0)]
+    rng = np.random.default_rng(11)
+    scattered = list(zip(rng.uniform(-50, 50, 150), rng.uniform(-30, 30, 150)))
+    xy = grid + clamped + scattered + [(float("nan"), 5.0)]
+    pts = pd.DataFrame({"point_id": np.arange(len(xy), dtype=np.int64),
+                        "x": [float(a) for a, _ in xy],
+                        "y": [float(b) for _, b in xy]})
+    # a separate frame whose partitions (hence Arrow batches) hold only
+    # points that no polygon's cover reaches
+    far = pd.DataFrame({"point_id": np.arange(1000, 1040, dtype=np.int64),
+                        "x": np.linspace(-170.0, -150.0, 40),
+                        "y": np.linspace(-60.0, -50.0, 40)})
+
+    def rect(w, s, e, n):
+        return [[w, s], [e, s], [e, n], [w, n], [w, s]]
+
+    polys = [
+        (0, [rect(-40.0, -30.0, 40.0, 30.0), rect(-10.0, -5.0, 10.0, 5.0)]),
+        (1, [[[1.0, 1.0], [20.0, 2.0], [10.0, 10.0], [1.0, 1.0]]]),
+        (2, [rect(0.0, 0.0, 22.5, 11.25)]),
+        (3, [rect(22.5, 11.25, 45.0, 22.5)]),
+        (4, [rect(-30.0, -20.0, 10.0, 15.0)]),
+        (5, [rect(-10.0, -15.0, 30.0, 20.0)]),
+        (6, [rect(170.0, 80.0, 180.0, 90.0)]),
+        (7, [rect(-180.0, -90.0, -170.0, -80.0)]),
+    ]
+    # null coordinates still get a cell: the encoder's greatest/least skip nulls
+    nulls = [(2000, None, 5.0), (2001, 5.0, None)]
+    pt_schema = "point_id long, x double, y double"
+    points_df = spark.createDataFrame(far, pt_schema) \
+        .union(spark.createDataFrame(pts, pt_schema)) \
+        .union(spark.createDataFrame(nulls, pt_schema))
+    schema = "poly_id long, rings array<array<array<double>>>"
+    all_pts = pd.concat([far, pts, pd.DataFrame(nulls, columns=pts.columns)],
+                        ignore_index=True)
+    for table in (polys, []):
+        poly_df = spark.createDataFrame(table, schema)
+        got = [{(r["point_id"], r["poly_id"]) for r in
+                pip_join(points_df, poly_df, res,
+                         rings_distribution=shape).collect()}
+               for shape in ("driver", "cogroup")]
+        assert got[0] == got[1] == _pip_oracle(all_pts, table)
+    assert got[0] == set() and len(_pip_oracle(all_pts, polys)) > 100
+
+
 def test_within_distance_join_matches_bruteforce(spark):
     from kml2geojson_spark.spatial.ops import within_distance_join
     pts = _points_pdf()
